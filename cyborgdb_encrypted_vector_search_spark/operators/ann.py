@@ -20,6 +20,14 @@ fraction of it" are:
 Both turn O(corpus) per query into O(corpus/buckets · probes) and are
 embarrassingly scalable: build is one pass, search is pruned scan +
 TakeOrderedAndProject.
+
+Every fixed-nprobe IVF search here and in operators/quant.py and
+operators/pq.py picks its probed lists through one of two helpers —
+:func:`batch_probes` (a per-query window inside the plan) or
+:func:`probe_lists` (one driver job for many targets) — both ordering
+centroids by (L2 distance asc, centroid_id asc); every batch search
+ranks its candidates through ``knn.topk_per_group``. The ordering and
+tie-break of probes and per-query top-k live in those helpers alone.
 """
 
 from __future__ import annotations
@@ -31,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
+from cyborgdb_encrypted_vector_search_spark.operators import knn
 
 
 # --- random-hyperplane LSH ---------------------------------------------
@@ -156,8 +165,6 @@ def lsh_search_batch(
     (WindowGroupLimit). A corpus row has exactly one bucket, so no
     (query, row) pair is scored twice.
     """
-    from pyspark.sql import Window
-
     probes = queries_bucketed.select(
         F.col(query_id_col).alias("__qid"),
         F.col(unit_col).alias("__qunit"),
@@ -168,15 +175,9 @@ def lsh_search_batch(
     score = F.when(
         (F.col(norm_col) == 0) | (F.col("__qnorm") == 0), F.lit(-1.0)
     ).otherwise(V.dot(unit_col, "__qunit"))
-    w = Window.partitionBy("__qid").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        cand.withColumn("score", score)
-        .withColumn("__rank", F.row_number().over(w))
-        .filter(F.col("__rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id_col), F.col(id_col), F.col("score")
-        )
-    )
+    return knn.topk_per_group(
+        cand.withColumn("score", score), k, "__qid", "score", id_col
+    ).select(F.col("__qid").alias(query_id_col), F.col(id_col), F.col("score"))
 
 
 # --- IVF ----------------------------------------------------------------
@@ -351,12 +352,9 @@ def ivf_search_adaptive(
         )
     cw = centroids.join(F.broadcast(counts), "centroid_id")
     probe_ids = adaptive_probe_ids(cw, target, k=k, factor=factor)
-    t = V.literal_vector([float(x) for x in target])
-    return (
-        corpus_with_centroids.filter(F.col("centroid_id").isin(probe_ids))
-        .withColumn("score", V.cosine(vec_col, t))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    return knn.topk_against_target(
+        corpus_with_centroids.filter(F.col("centroid_id").isin(probe_ids)),
+        [float(x) for x in target], k, id_col, vec_col,
     )
 
 
@@ -378,46 +376,28 @@ def ivf_search_batch(
     each. The batch shape a 100 TB serving job wants instead:
 
     1. queries × centroids (broadcast — centroids are small by
-       construction) → per-query nprobe nearest lists via a
-       row_number window (WindowGroupLimit keeps it partial);
+       construction) → per-query nprobe nearest lists
+       (:func:`batch_probes`);
     2. the (query, centroid) probe list — Q × nprobe rows — broadcasts
        and hash-joins the corpus on ``centroid_id``: a corpus row is
        scored ONLY against queries that probed its list, so work is
        candidate-bounded exactly like the single-query pruned scan;
-    3. exact cosine on survivors + per-query top-k window.
+    3. exact cosine on survivors + per-query top-k window
+       (``knn.topk_per_group``).
 
     No driver loop, no collect; one broadcast join + one shuffle (the
     final per-query window on __qid).
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(query_id_col).alias("__qid"),
         F.col(query_vec_col).alias("__qvec"),
     )
-    cent = centroids.select("centroid_id", "centroid")
-    wp = Window.partitionBy("__qid").orderBy(
-        F.asc("__cd"), F.asc("centroid_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("__cd", V.l2_distance("__qvec", "centroid"))
-        .withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select("__qid", "__qvec", "centroid_id")
-    )
+    probes = batch_probes(q, centroids, nprobe)
     cand = corpus_with_centroids.join(F.broadcast(probes), "centroid_id")
-    wk = Window.partitionBy("__qid").orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
-    return (
-        cand.withColumn("score", V.cosine(vec_col, "__qvec"))
-        .withColumn("__rank", F.row_number().over(wk))
-        .filter(F.col("__rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id_col), F.col(id_col), F.col("score")
-        )
-    )
+    return knn.topk_per_group(
+        cand.withColumn("score", V.cosine(vec_col, "__qvec")),
+        k, "__qid", "score", id_col,
+    ).select(F.col("__qid").alias(query_id_col), F.col(id_col), F.col("score"))
 
 
 def ivf_search(
@@ -434,17 +414,76 @@ def ivf_search(
     When corpus_with_centroids is a centroid-partitioned table, the
     centroid_id IN (...) filter prunes partitions before any IO.
     """
-    t = V.literal_vector(target)
-    probe_ids = [
-        r["centroid_id"]
-        for r in centroids.withColumn("__d", V.l2_distance("centroid", t))
-        .orderBy(F.asc("__d"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .collect()
-    ]
-    return (
-        corpus_with_centroids.filter(F.col("centroid_id").isin(probe_ids))
-        .withColumn("score", V.cosine(vec_col, t))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    probe_ids = probe_lists(centroids, {0: target}, nprobe)[0]
+    return knn.topk_against_target(
+        corpus_with_centroids.filter(F.col("centroid_id").isin(probe_ids)),
+        target, k, id_col, vec_col,
     )
+
+
+# --- shared IVF probes ---------------------------------------------------
+
+def batch_probes(
+    q: DataFrame,
+    centroids: DataFrame,
+    nprobe: int,
+    keep_centroid: bool = False,
+) -> DataFrame:
+    """Every query's ``nprobe`` nearest lists in ONE plan: ``q``
+    (__qid, __qvec) × centroids (broadcast — small by construction),
+    ranked per query by (L2 distance, centroid_id) through
+    ``knn.topk_per_group`` (WindowGroupLimit keeps it partial). Returns
+    (__qid, __qvec, centroid_id), plus the centroid vector as __cvec
+    when ``keep_centroid`` (residual codes need it)."""
+    knn.check_k(nprobe, "nprobe")
+    pairs = q.crossJoin(
+        F.broadcast(centroids.select("centroid_id", "centroid"))
+    ).withColumn("__cd", V.l2_distance("__qvec", "centroid"))
+    return knn.topk_per_group(
+        pairs, nprobe, "__qid", "__cd", "centroid_id", descending=False
+    ).select(
+        "__qid",
+        "__qvec",
+        "centroid_id",
+        *([F.col("centroid").alias("__cvec")] if keep_centroid else []),
+    )
+
+
+def nearest_centroids(
+    centroids: DataFrame, targets: dict, nprobe: int, *extra: str
+) -> dict:
+    """{key: [Row(centroid_id, *extra), ...]} — each target's ``nprobe``
+    nearest centroids in (distance, centroid_id) order, for all targets
+    in ONE driver job: a union of per-target TakeOrderedAndProject
+    branches over the tiny centroid table, collected once."""
+    knn.check_k(nprobe, "nprobe")
+    out: dict = {key: [] for key in targets}
+    probes = None
+    for key, target in sorted(targets.items()):
+        t = V.literal_vector([float(x) for x in target])
+        p = (
+            centroids.withColumn("__d", V.l2_distance("centroid", t))
+            .orderBy(F.asc("__d"), F.asc("centroid_id"))
+            .limit(nprobe)
+            .select(F.lit(key).alias("__qk"), "centroid_id", *extra, "__d")
+        )
+        probes = p if probes is None else probes.unionAll(p)
+    if probes is None:
+        return out
+    for r in sorted(
+        probes.collect(), key=lambda r: (r["__qk"], r["__d"], r["centroid_id"])
+    ):
+        out[r["__qk"]].append(r)
+    return out
+
+
+def probe_lists(centroids: DataFrame, targets: dict, nprobe: int = 4) -> dict:
+    """Probe lists for MANY query targets in ONE driver job: a serving
+    loop that issued Q single-target probes paid Q driver jobs just to
+    pick ``nprobe`` ids each. Returns {query_key: [centroid_id, ...]},
+    each list in (distance asc, centroid_id asc) order — the order a
+    single-target probe produces."""
+    return {
+        key: [r["centroid_id"] for r in rows]
+        for key, rows in nearest_centroids(centroids, targets, nprobe).items()
+    }

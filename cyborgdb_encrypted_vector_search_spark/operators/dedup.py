@@ -27,6 +27,7 @@ log = logging.getLogger(__name__)
 
 from cyborgdb_encrypted_vector_search_spark.caching import (
     snap_plan as _snap_plan,
+    track,
 )
 from cyborgdb_encrypted_vector_search_spark.functions import hashing as H
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
@@ -87,6 +88,17 @@ def minhash_signatures(
     )
 
 
+def _rows_per_band(num_hashes: int, num_bands: int) -> int:
+    """Rows per MinHash band. The hashes must split evenly into at least
+    one row per band: a remainder would be silently dropped, and zero
+    rows per band makes every band key equal, pairing every document."""
+    if num_bands < 1 or num_hashes < num_bands or num_hashes % num_bands:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by num_bands ({num_bands})"
+        )
+    return num_hashes // num_bands
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -101,11 +113,7 @@ def lsh_candidate_pairs(
     The join key is the band hash, so co-bucketed docs collide without
     any pairwise scan. Returns (doc_a, doc_b).
     """
-    if num_hashes % num_bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by num_bands ({num_bands})"
-        )
-    rows_per_band = num_hashes // num_bands
+    rows_per_band = _rows_per_band(num_hashes, num_bands)
     sig = minhash_signatures(df, id_col, text_col, shingle_len, num_hashes)
     banded = sig.select(
         F.col(id_col).alias("doc"),
@@ -117,7 +125,8 @@ def lsh_candidate_pairs(
     # recomputed for BOTH join sides. The banded frame is tiny relative
     # to the corpus (id + band key per band), so materializing it is the
     # cluster-scale move too (a signature table you'd checkpoint).
-    banded = banded.persist()
+    # Tracked, so caching.release_all() frees it with the rest.
+    banded = track(banded.persist())
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -666,19 +675,21 @@ def lsh_candidate_pairs_xxhash(
     materialization, cheaper shuffle + join probe). Not oracle-portable;
     recall behavior is statistically identical (same banding math over a
     different uniform hash family)."""
-    rows_per_band = num_hashes // num_bands
+    rows_per_band = _rows_per_band(num_hashes, num_bands)
     shingled = df.select(
         F.col(id_col), H.word_shingles(F.col(text_col), shingle_len).alias("__sh")
     )
     sig = shingled.select(
         F.col(id_col), H.minhash_xxhash(F.col("__sh"), num_hashes).alias("signature")
     )
-    banded = sig.select(
-        F.col(id_col).alias("doc"),
-        F.explode(
-            H.minhash_bands_xxhash(F.col("signature"), num_bands, rows_per_band)
-        ).alias("band"),
-    ).persist()
+    banded = track(
+        sig.select(
+            F.col(id_col).alias("doc"),
+            F.explode(
+                H.minhash_bands_xxhash(F.col("signature"), num_bands, rows_per_band)
+            ).alias("band"),
+        ).persist()
+    )
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -1335,8 +1346,6 @@ def resolve_entities(
         stats["dropped_blocks"] = 0
     if not passes:
         raise ValueError("resolve_entities requires at least one pass")
-    from cyborgdb_encrypted_vector_search_spark.caching import track
-
     # Persist the record frame once (r13, guide §5/§7.3): every pass
     # scans it three times (the oversized-block probe + both self-join
     # sides) and the final label join once more — ~7 scans of what may
@@ -1484,8 +1493,6 @@ def resolve_entities_incremental(
         raise ValueError(
             "resolve_entities_incremental requires at least one pass"
         )
-    from cyborgdb_encrypted_vector_search_spark.caching import track
-
     # same per-pass multi-scan shape as the rebuild: cache both record
     # frames once (r13 — see resolve_entities' persist note)
     if not old_records.is_cached:

@@ -1006,6 +1006,18 @@ def _ids_pack(lo, hi) -> bool:
     )
 
 
+def _edges_pack(edges: DataFrame) -> bool:
+    """One bounded probe on the canonical edge frame: its id range
+    covers every wedge endpoint u/v — including hubs the apex cap
+    dropped, which still appear as neighbors — so it proves the packed
+    key safe."""
+    row = edges.agg(
+        F.min(F.least("src", "dst")).alias("lo"),
+        F.max(F.greatest("src", "dst")).alias("hi"),
+    ).collect()[0]
+    return _ids_pack(row["lo"], row["hi"])
+
+
 def _pack_uv():
     return F.shiftleft(F.col("u").cast("bigint"), 32).bitwiseOR(
         F.col("v").cast("bigint")
@@ -1052,13 +1064,7 @@ def common_neighbor_candidates(
     edges, sym = _wedge_adjacency(
         edges, min_common, max_apex_degree, "common_neighbor_candidates"
     )
-    # One bounded probe on the canonical edge frame (r13): the id
-    # range proves the packed key safe.
-    row = edges.agg(
-        F.min(F.least("src", "dst")).alias("lo"),
-        F.max(F.greatest("src", "dst")).alias("hi"),
-    ).collect()[0]
-    pack = _ids_pack(row["lo"], row["hi"])
+    pack = _edges_pack(edges)
     id_type = dict(edges.dtypes)["src"]
     a = sym.select("w", F.col("n").alias("u"))
     b = sym.select("w", F.col("n").alias("v"))
@@ -1139,8 +1145,8 @@ def weighted_link_scores(
     wdeg = track(
         sym.groupBy("w").agg(F.count(F.lit(1)).alias("dw")).persist()
     )
-    # ONE bounded aggregate prices every plan choice (same job the
-    # pre-r13 code spent on the wedge volume alone):
+    # ONE bounded aggregate prices the join and aggregation choices
+    # (same job the pre-r13 code spent on the wedge volume alone):
     # - vol = Σ dw(dw-1)/2, the exact row count the (u,v) aggregation
     #   will see. Above the threshold, the partial aggregate is a
     #   liability: the wedge stream arrives partitioned by APEX, so
@@ -1162,18 +1168,17 @@ def weighted_link_scores(
     #   Past the bound, the scale-safe pre-r13 shape: shuffled degree
     #   join, localCheckpoint (truncates the adaptive plan), explicit
     #   round-robin repartition to restore enumeration parallelism.
-    # - the id range proves the packed (u << 32 | v) group key safe
-    #   and max(dw) the int32 degree narrowing (guide §2.3).
+    # - max(dw) proves the int32 degree narrowing (guide §2.3).
+    # The packed (u << 32 | v) key is proved on the edge frame instead:
+    # the apexes w miss hubs the cap dropped, which still appear as u/v.
     row = wdeg.agg(
         F.sum(F.col("dw") * (F.col("dw") - 1) / 2).alias("v"),
         F.sum("dw").alias("sum_d"),
         F.max("dw").alias("max_d"),
-        F.min("w").alias("lo"),
-        F.max("w").alias("hi"),
     ).collect()[0]
     vol = row["v"]
     heavy_wedges = vol is not None and vol > 2.5e8
-    pack = _ids_pack(row["lo"], row["hi"])
+    pack = _edges_pack(edges)
     small_sym = (
         row["sum_d"] is not None and 20 * row["sum_d"] < (32 << 20)
     )

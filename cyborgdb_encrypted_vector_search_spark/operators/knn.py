@@ -14,17 +14,54 @@ Re-creates the reference's two query shapes:
   O(corpus).
 
 Determinism: ties broken by ascending neighbor id everywhere so results
-are reproducible and oracle-comparable.
+are reproducible and oracle-comparable. :func:`topk_per_group` is the
+one per-query top-k window every batch search in knn/ann/quant/pq
+ranks through (score, then ascending id), and :func:`check_k` the one
+``k``/``nprobe`` bound check; the IVF probes in operators/ann.py rank
+centroids through the same window.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
+
+
+def check_k(k: int, name: str = "k") -> None:
+    """Reject a top-k or probe bound below 1 — an empty window would
+    otherwise return an empty frame without saying why."""
+    if k < 1:
+        raise ValueError(f"{name} must be >= 1, got {k}")
+
+
+def topk_per_group(
+    df: DataFrame,
+    k: int,
+    group_col: str,
+    score_col: str,
+    id_cols: str | Sequence[str],
+    descending: bool = True,
+    rank_col: str | None = None,
+) -> DataFrame:
+    """The k best rows of every ``group_col`` group: ``row_number``
+    over (score, then ascending ``id_cols``) and ``<= k``. ``rank_col``
+    keeps the 1-based rank. Spark 4's WindowGroupLimit pushes the limit
+    into a per-partition partial, so the shuffle into the window
+    carries at most k rows per group per partition."""
+    check_k(k)
+    ids = [id_cols] if isinstance(id_cols, str) else list(id_cols)
+    score = F.desc(score_col) if descending else F.asc(score_col)
+    w = Window.partitionBy(group_col).orderBy(score, *[F.asc(c) for c in ids])
+    ranked = df.withColumn("__rank", F.row_number().over(w)).filter(
+        F.col("__rank") <= k
+    )
+    if rank_col is None:
+        return ranked.drop("__rank")
+    return ranked.withColumnRenamed("__rank", rank_col)
 
 
 def score_against_target(
@@ -56,8 +93,7 @@ def topk_against_target(
     Plans as TakeOrderedAndProject (per-partition heap of k, merge on
     driver) — no global sort even over a 100 TB corpus.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    check_k(k)
     scored = score_against_target(corpus, target, embedding_col, score_col)
     return scored.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
 
@@ -88,9 +124,6 @@ def knn_join(
     per-partition partial, so the shuffle carries only candidate
     survivors, not the full cross product.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    asc = metric != "cosine"  # cosine: higher is better; distances: lower
     if metric == "cosine":
         # Pre-normalize both sides once per ROW so the pairwise score is
         # a single array fold (see vector.with_unit_vectors rationale).
@@ -127,18 +160,15 @@ def knn_join(
         )
     else:
         raise ValueError(f"unknown metric {metric!r}")
-    order = [
-        F.asc(score_col) if asc else F.desc(score_col),
-        F.asc(corpus_id_col),
-    ]
-    w = Window.partitionBy("__qid").orderBy(*order)
-    ranked = joined.withColumn("__rank", F.row_number().over(w)).filter(
-        F.col("__rank") <= k
+    ranked = topk_per_group(
+        joined,
+        k,
+        "__qid",
+        score_col,
+        corpus_id_col,
+        descending=metric == "cosine",  # cosine: higher is better
+        rank_col=rank_col,
     )
-    if rank_col is None:
-        ranked = ranked.drop("__rank")
-    else:
-        ranked = ranked.withColumnRenamed("__rank", rank_col)
     return ranked.drop(query_vec_col).withColumnRenamed("__qid", query_id_col)
 
 
@@ -181,16 +211,11 @@ def classify_by_vote(
         F.count(F.lit(1)).cast("bigint").alias("n_votes"),
         F.min("__rank").cast("int").alias("best_rank"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("n_votes"), F.asc("best_rank"), F.asc(label_col)
-    )
-    return (
-        votes.withColumn("__vr", F.row_number().over(w))
-        .filter(F.col("__vr") == 1)
-        .select(
-            query_id_col,
-            F.col(label_col).alias("predicted"),
-            "n_votes",
-            "best_rank",
-        )
+    return topk_per_group(
+        votes, 1, query_id_col, "n_votes", ["best_rank", label_col]
+    ).select(
+        query_id_col,
+        F.col(label_col).alias("predicted"),
+        "n_votes",
+        "best_rank",
     )

@@ -29,7 +29,11 @@ Search", TPAMI 2011):
 Composes with the IVF layout (operators/ann.py): partition the encoded
 table by centroid_id and ADC-scan only the probed partitions; re-rank
 the ADC top candidates with exact distances from the full-precision
-vectors when recall matters.
+vectors when recall matters. Probes come from ``ann.batch_probes`` /
+``ann.probe_lists`` and per-query windows from ``knn.topk_per_group``
+— the one definition of the (score, id) ordering and tie-break; the
+single-target searches share one ADC re-rank tail (``_adc_topk``) and
+the batch searches one Arrow-batched ADC stage (``_ivf_adc_batch``).
 """
 
 from __future__ import annotations
@@ -41,6 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
+from cyborgdb_encrypted_vector_search_spark.operators import ann, knn
 
 
 def _kmeans_1sub(x: np.ndarray, k: int, seed: int, iters: int) -> np.ndarray:
@@ -197,15 +202,26 @@ def search_adc(
     scored = codes_df.select(
         F.col(id_col), adc_score("codes", adc_table(target, codebooks)).alias("adc_dist")
     )
-    if rerank_df is None:
-        return (
-            scored.orderBy(F.asc("adc_dist"), F.asc(id_col))
-            .limit(k)
-            .withColumn("score", -F.col("adc_dist"))
-        )
+    return _adc_topk(scored, target, k, id_col, rerank_df, rerank_factor, vec_col)
+
+
+def _adc_topk(
+    scored: DataFrame,
+    target: Sequence[float],
+    k: int,
+    id_col: str,
+    rerank_df: DataFrame | None,
+    rerank_factor: int,
+    vec_col: str,
+) -> DataFrame:
+    """Single-target tail over ``scored`` (id, adc_dist): the ADC top-k,
+    or the ADC top ``k * rerank_factor`` joined back to ``rerank_df``
+    and re-ranked by exact cosine (``search_adc``'s output contract)."""
     cand = scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(
-        k * rerank_factor
+        k * (1 if rerank_df is None else rerank_factor)
     )
+    if rerank_df is None:
+        return cand.withColumn("score", -F.col("adc_dist"))
     t = V.literal_vector([float(x) for x in target])
     return (
         rerank_df.join(F.broadcast(cand), id_col)
@@ -231,8 +247,6 @@ def residual_frame(
     budget yields a tighter quantizer. One broadcast join + one narrow
     projection — linear, shuffle-free at any corpus size.
     """
-    from cyborgdb_encrypted_vector_search_spark.operators import ann
-
     assigned = ann.assign_centroids(
         df.select(id_col, vec_col), centroids, vec_col
     )
@@ -277,15 +291,7 @@ def ivfadc_search(
     partitions, no Python in the hot path.
     """
     t = np.asarray(target, dtype=np.float64)
-    probe = (
-        centroids.withColumn(
-            "__d", V.l2_distance("centroid", V.literal_vector([float(x) for x in target]))
-        )
-        .orderBy(F.asc("__d"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .select("centroid_id", "centroid")
-        .collect()
-    )
+    probe = ann.nearest_centroids(centroids, {0: target}, nprobe, "centroid")[0]
     tables = {
         r["centroid_id"]: adc_table(
             (t - np.asarray(r["centroid"], dtype=np.float64)).tolist(),
@@ -305,80 +311,87 @@ def ivfadc_search(
             else expr.when(F.col("centroid_id") == cid, branch)
         )
     scored = pruned.select(F.col(id_col), expr.alias("adc_dist"))
-    if rerank_df is None:
-        # Stable contract: `score` = -adc_dist (higher is better), so
-        # callers select the same column whether or not re-rank is on.
-        return (
-            scored.orderBy(F.asc("adc_dist"), F.asc(id_col))
-            .limit(k)
-            .withColumn("score", -F.col("adc_dist"))
-        )
-    cand = scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(
-        k * rerank_factor
-    )
-    tl = V.literal_vector([float(x) for x in target])
-    return (
-        rerank_df.join(F.broadcast(cand), id_col)
-        .withColumn("score", F.round(V.cosine(vec_col, tl), 7))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, "score")
-    )
+    return _adc_topk(scored, target, k, id_col, rerank_df, rerank_factor, vec_col)
 
 
-def _batch_probes(
-    q: DataFrame,
+def _ivf_adc_batch(
+    codes_df: DataFrame,
     centroids: DataFrame,
-    nprobe: int,
-    keep_centroid: bool = False,
-) -> DataFrame:
-    """Per-query nprobe nearest lists via one broadcast window over
-    queries × centroids (q carries __qid/__qvec)."""
-    from pyspark.sql import Window
-
-    cent = centroids.select("centroid_id", "centroid")
-    wp = Window.partitionBy("__qid").orderBy(
-        F.asc("__cd"), F.asc("centroid_id")
-    )
-    cols = ["__qid", "__qvec", "centroid_id"] + (
-        ["__cvec"] if keep_centroid else []
-    )
-    return (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("__cd", V.l2_distance("__qvec", "centroid"))
-        .withColumn("__cvec", F.col("centroid"))
-        .withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select(*cols)
-    )
-
-
-def _batch_finish(
-    scored: DataFrame,
-    q: DataFrame,
-    rerank_df: DataFrame | None,
+    codebooks: Sequence[np.ndarray],
+    queries: DataFrame,
     k: int,
+    nprobe: int,
+    rerank_df: DataFrame | None,
     rerank_factor: int,
     id_col: str,
     vec_col: str,
     query_id_col: str,
+    query_vec_col: str,
+    residual: bool,
 ) -> DataFrame:
-    """Shared shortlist + exact-cosine re-rank tail of the batch ADC
-    searches (scored: __qid, __vid, adc_dist).
+    """Shared body of the batch IVF-PQ / IVFADC searches: batch probes,
+    ADC in one Arrow-batched ``mapInPandas`` stage, per-query shortlist
+    window, optional exact-cosine re-rank window.
 
-    Output contract (both branches): a ``score`` column where HIGHER is
-    better — exact cosine when ``rerank_df`` is given, else the negated
-    ADC L2 distance (``-adc_dist``, also kept as its own column)."""
-    from pyspark.sql import Window
+    The stage groups each Arrow batch by query (and by probed list when
+    ``residual``: residual codes need the table of ``qvec − centroid``),
+    builds the m×2^nbits table once per group with numpy and
+    gather-sums the group's codes. Output contract: a ``score`` column
+    where HIGHER is better — exact cosine when ``rerank_df`` is given,
+    else the negated ADC L2 distance (``-adc_dist``, also kept)."""
+    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    m = len(books)
+    keys = ["__qid", "centroid_id"] if residual else ["__qid"]
 
-    ws = Window.partitionBy("__qid").orderBy(
-        F.asc("adc_dist"), F.asc("__vid")
+    def _adc(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            parts = []
+            for _, grp in pdf.groupby(keys):
+                r = np.asarray(grp["__qvec"].iloc[0], dtype=np.float64)
+                if residual:
+                    r = r - np.asarray(grp["__cvec"].iloc[0], dtype=np.float64)
+                table = np.asarray(adc_table(r, books))
+                codes = np.stack(grp["codes"].to_list()).astype(np.int64)
+                parts.append(
+                    pd.DataFrame(
+                        {
+                            "__qid": grp["__qid"].to_numpy(),
+                            "__vid": grp["__vid"].to_numpy(),
+                            "adc_dist": table[np.arange(m)[None, :], codes].sum(axis=1),
+                        }
+                    )
+                )
+            yield pd.concat(parts, ignore_index=True)
+
+    q = queries.select(
+        F.col(query_id_col).cast("long").alias("__qid"),
+        F.col(query_vec_col).cast("array<double>").alias("__qvec"),
     )
-    shortlist = scored.withColumn("__rn", F.row_number().over(ws)).filter(
-        F.col("__rn") <= k * (rerank_factor if rerank_df is not None else 1)
+    probes = ann.batch_probes(q, centroids, nprobe, keep_centroid=residual)
+    cand = codes_df.join(F.broadcast(probes), "centroid_id").select(
+        "__qid",
+        "__qvec",
+        *(["__cvec", "centroid_id"] if residual else []),
+        F.col(id_col).cast("long").alias("__vid"),
+        "codes",
+    )
+    scored = cand.mapInPandas(
+        _adc, schema="__qid long, __vid long, adc_dist double"
+    )
+    shortlist = knn.topk_per_group(
+        scored,
+        k * (1 if rerank_df is None else rerank_factor),
+        "__qid",
+        "adc_dist",
+        "__vid",
+        descending=False,
     )
     if rerank_df is None:
-        return shortlist.filter(F.col("__rn") <= k).select(
+        return shortlist.select(
             F.col("__qid").alias(query_id_col),
             F.col("__vid").alias(id_col),
             F.col("adc_dist"),
@@ -390,15 +403,10 @@ def _batch_finish(
         .join(F.broadcast(q), "__qid")
         .withColumn("score", F.round(V.cosine(vec_col, "__qvec"), 7))
     )
-    wk = Window.partitionBy("__qid").orderBy(F.desc("score"), F.asc("__vid"))
-    return (
-        rer.withColumn("__rk", F.row_number().over(wk))
-        .filter(F.col("__rk") <= k)
-        .select(
-            F.col("__qid").alias(query_id_col),
-            F.col("__vid").alias(id_col),
-            F.col("score"),
-        )
+    return knn.topk_per_group(rer, k, "__qid", "score", "__vid").select(
+        F.col("__qid").alias(query_id_col),
+        F.col("__vid").alias(id_col),
+        F.col("score"),
     )
 
 
@@ -426,61 +434,10 @@ def ivfadc_search_batch(
     chained-CASE JVM tables can't batch (one literal table per query ×
     probe would blow up codegen); one Arrow-batched Python stage with
     O(rows) work is the right trade."""
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    sub = books[0].shape[1]
-
-    q = queries.select(
-        F.col(query_id_col).cast("long").alias("__qid"),
-        F.col(query_vec_col).cast("array<double>").alias("__qvec"),
-    )
-    probes = _batch_probes(q, centroids, nprobe, keep_centroid=True)
-    cand = codes_df.join(F.broadcast(probes), "centroid_id").select(
-        "__qid",
-        "__qvec",
-        "__cvec",
-        F.col("centroid_id"),
-        F.col(id_col).cast("long").alias("__vid"),
-        "codes",
-    )
-
-    def _adc(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            parts = []
-            for (qid, _cid), grp in pdf.groupby(["__qid", "centroid_id"]):
-                qv = np.asarray(grp["__qvec"].iloc[0], dtype=np.float64)
-                cv = np.asarray(grp["__cvec"].iloc[0], dtype=np.float64)
-                r = qv - cv
-                table = np.stack(
-                    [
-                        ((b - r[j * sub : (j + 1) * sub][None, :]) ** 2).sum(
-                            axis=1
-                        )
-                        for j, b in enumerate(books)
-                    ]
-                )
-                codes = np.stack(grp["codes"].to_list()).astype(np.int64)
-                dist = table[np.arange(m)[None, :], codes].sum(axis=1)
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "__qid": qid,
-                            "__vid": grp["__vid"].to_numpy(),
-                            "adc_dist": dist,
-                        }
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    scored = cand.mapInPandas(
-        _adc, schema="__qid long, __vid long, adc_dist double"
-    )
-    return _batch_finish(
-        scored, q, rerank_df, k, rerank_factor, id_col, vec_col, query_id_col
+    return _ivf_adc_batch(
+        codes_df, centroids, codebooks, queries, k, nprobe, rerank_df,
+        rerank_factor, id_col, vec_col, query_id_col, query_vec_col,
+        residual=True,
     )
 
 
@@ -519,54 +476,10 @@ def ivfpq_search_batch(
     4. per-query shortlist window (k×rerank_factor), exact-cosine
        re-rank against the full-precision table, final top-k window.
     """
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    sub = books[0].shape[1]
-
-    q = queries.select(
-        F.col(query_id_col).cast("long").alias("__qid"),
-        F.col(query_vec_col).cast("array<double>").alias("__qvec"),
-    )
-    probes = _batch_probes(q, centroids, nprobe)
-    cand = codes_df.join(F.broadcast(probes), "centroid_id").select(
-        "__qid", "__qvec", F.col(id_col).cast("long").alias("__vid"), "codes"
-    )
-
-    def _adc(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            parts = []
-            for qid, grp in pdf.groupby("__qid"):
-                qv = np.asarray(grp["__qvec"].iloc[0], dtype=np.float64)
-                table = np.stack(
-                    [
-                        ((b - qv[j * sub : (j + 1) * sub][None, :]) ** 2).sum(
-                            axis=1
-                        )
-                        for j, b in enumerate(books)
-                    ]
-                )
-                codes = np.stack(grp["codes"].to_list()).astype(np.int64)
-                dist = table[np.arange(m)[None, :], codes].sum(axis=1)
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "__qid": qid,
-                            "__vid": grp["__vid"].to_numpy(),
-                            "adc_dist": dist,
-                        }
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    scored = cand.mapInPandas(
-        _adc, schema="__qid long, __vid long, adc_dist double"
-    )
-    return _batch_finish(
-        scored, q, rerank_df, k, rerank_factor, id_col, vec_col, query_id_col
+    return _ivf_adc_batch(
+        codes_df, centroids, codebooks, queries, k, nprobe, rerank_df,
+        rerank_factor, id_col, vec_col, query_id_col, query_vec_col,
+        residual=False,
     )
 
 
@@ -594,34 +507,8 @@ def ivfpq_search(
     100 TB the only full-corpus costs are build-time one-pass assign
     and encode.
     """
-    t = V.literal_vector([float(x) for x in target])
-    probe_ids = [
-        r["centroid_id"]
-        for r in centroids.withColumn("__d", V.l2_distance("centroid", t))
-        .orderBy(F.asc("__d"), F.asc("centroid_id"))
-        .limit(nprobe)
-        .collect()
-    ]
-    pruned = codes_df.filter(F.col("centroid_id").isin(probe_ids))
-    scored = pruned.select(
-        F.col(id_col),
-        adc_score("codes", adc_table(target, codebooks)).alias("adc_dist"),
-    )
-    if rerank_df is None:
-        # Stable contract: `score` = -adc_dist (higher is better), so
-        # callers select the same column whether or not re-rank is on.
-        return (
-            scored.orderBy(F.asc("adc_dist"), F.asc(id_col))
-            .limit(k)
-            .withColumn("score", -F.col("adc_dist"))
-        )
-    cand = scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(
-        k * rerank_factor
-    )
-    return (
-        rerank_df.join(F.broadcast(cand), id_col)
-        .withColumn("score", F.round(V.cosine(vec_col, t), 7))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, "score")
+    probe_ids = ann.probe_lists(centroids, {0: target}, nprobe)[0]
+    return search_adc(
+        codes_df.filter(F.col("centroid_id").isin(probe_ids)),
+        codebooks, target, k, id_col, rerank_df, rerank_factor, vec_col,
     )

@@ -43,6 +43,11 @@ bounds ride along as literals — no join, no shuffle before the final
 top-k. Batch variant scores all queries in one corpus pass via the
 same broadcast-queries plan as knn.knn_join.
 
+Probes and per-query windows come from the shared helpers
+(``ann.batch_probes`` / ``ann.probe_lists`` and
+``knn.topk_per_group``), which define the (score, id) ordering and
+tie-break for every vector search in the package.
+
 No counterpart in the reference (it delegates ANN to ChromaDB's HNSW,
 src/chromadb_store.py:1); public design per FAISS's ScalarQuantizer.
 """
@@ -53,6 +58,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cyborgdb_encrypted_vector_search_spark.functions import vector as V
+from cyborgdb_encrypted_vector_search_spark.operators import ann as A
 from cyborgdb_encrypted_vector_search_spark.operators import knn
 
 
@@ -246,15 +252,8 @@ def sq8_batch_search(
         )
         .withColumn("score", V.cosine(vec_col, "__qv"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
-    return (
-        exact.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= k)
-        .select(query_id_col, id_col, "score")
+    return knn.topk_per_group(exact, k, query_id_col, "score", id_col).select(
+        query_id_col, id_col, "score"
     )
 
 
@@ -274,46 +273,14 @@ def build_ivfsq_layout(
     only the 4x-smaller codes column. The full-precision vector rides
     along in the same partition for the exact re-rank, touched for
     just the shortlist."""
-    from cyborgdb_encrypted_vector_search_spark.operators import ann as A
-
     assigned = A.assign_centroids(df, centroids, vec_col)
     enc = sq8_encode(assigned, mins, maxs, vec_col=vec_col)
     enc.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
 
 
-def ivfsq_probe_lists(
-    centroids: DataFrame, targets: dict, nprobe: int = 4
-) -> dict:
-    """Probe lists for MANY query targets in ONE driver job (r12):
-    the per-query ``ivfsq_search`` probe is a tiny
-    TakeOrderedAndProject over the centroid table, but a serving gate
-    that issues Q sequential searches paid Q driver jobs (and Q
-    re-derivations of the centroid frame) just to pick 4 ids each.
-    Union the Q per-target top-``nprobe`` subplans — each branch keeps
-    the EXACT per-query selection expression (asc distance, asc id) —
-    and collect once. Returns {query_key: [centroid_id, ...]} with
-    each list in the same (distance, id) order the single-query path
-    produces."""
-    probes = None
-    for key, target in sorted(targets.items()):
-        t = V.literal_vector([float(x) for x in target])
-        p = (
-            centroids.withColumn("__d", V.l2_distance("centroid", t))
-            .orderBy(F.asc("__d"), F.asc("centroid_id"))
-            .limit(nprobe)
-            .select(
-                F.lit(key).alias("__qk"),
-                "centroid_id",
-                F.col("__d").alias("__dd"),
-            )
-        )
-        probes = p if probes is None else probes.unionAll(p)
-    out: dict = {k: [] for k in targets}
-    for r in sorted(
-        probes.collect(), key=lambda r: (r["__qk"], r["__dd"], r["centroid_id"])
-    ):
-        out[r["__qk"]].append(r["centroid_id"])
-    return out
+# Probe lists for many targets in one driver job; ivfsq_search's
+# ``probe_ids`` takes one entry of the result.
+ivfsq_probe_lists = A.probe_lists
 
 
 def ivfsq_search(
@@ -336,16 +303,7 @@ def ivfsq_search(
     ``probe_ids`` (from :func:`ivfsq_probe_lists`) skips the per-query
     probe job when the caller batched the probes for many queries."""
     if probe_ids is None:
-        t = V.literal_vector([float(x) for x in target])
-        probe_ids = [
-            r["centroid_id"]
-            for r in centroids.withColumn(
-                "__d", V.l2_distance("centroid", t)
-            )
-            .orderBy(F.asc("__d"), F.asc("centroid_id"))
-            .limit(nprobe)
-            .collect()
-        ]
+        probe_ids = A.probe_lists(centroids, {0: target}, nprobe)[0]
     probed = layout.filter(F.col("centroid_id").isin(list(probe_ids)))
     return sq8_search(
         probed, mins, maxs, target, k=k, oversample=oversample, id_col=id_col
@@ -378,45 +336,31 @@ def ivfsq_search_batch(
     4. exact re-rank joins the survivors back to the full-precision
        column (broadcast — the shortlist is tiny) and takes top-k.
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(query_id_col).alias("__qid"),
         F.col(query_vec_col).alias("__qvec"),
     )
-    cent = centroids.select("centroid_id", "centroid")
-    wp = Window.partitionBy("__qid").orderBy(F.asc("__cd"), F.asc("centroid_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("__cd", V.l2_distance("__qvec", "centroid"))
-        .withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select("__qid", "__qvec", "centroid_id")
-    )
+    probes = A.batch_probes(q, centroids, nprobe)
     approx_vec = sq8_decode_expr("codes", mins, maxs)
-    wk = Window.partitionBy("__qid").orderBy(
-        F.desc("approx_score"), F.asc(id_col)
-    )
-    shortlist = (
+    approx = (
         layout.select(id_col, "centroid_id", "codes")
         .join(F.broadcast(probes), "centroid_id")
         .withColumn("approx_score", V.cosine(approx_vec, "__qvec"))
-        .withColumn("__rn", F.row_number().over(wk))
-        .filter(F.col("__rn") <= oversample * k)
-        .select("__qid", "__qvec", "centroid_id", id_col)
     )
+    shortlist = knn.topk_per_group(
+        approx, oversample * k, "__qid", "approx_score", id_col
+    ).select("__qid", "__qvec", "centroid_id", id_col)
     # re-rank joins on (centroid_id, id): the broadcast join on the
     # PARTITION column lets dynamic partition pruning restrict the
     # full-precision read to the probed partitions — without it this
     # scan would stream the entire embedding column past the join
-    wr = Window.partitionBy("__qid").orderBy(F.desc("score"), F.asc(id_col))
-    return (
+    exact = (
         layout.select("centroid_id", id_col, "embedding")
         .join(F.broadcast(shortlist), ["centroid_id", id_col])
         .withColumn("score", V.cosine("embedding", "__qvec"))
-        .withColumn("__r", F.row_number().over(wr))
-        .filter(F.col("__r") <= k)
-        .select(F.col("__qid").alias(query_id_col), id_col, "score")
+    )
+    return knn.topk_per_group(exact, k, "__qid", "score", id_col).select(
+        F.col("__qid").alias(query_id_col), id_col, "score"
     )
 
 
@@ -438,8 +382,6 @@ def append_to_ivfsq_layout(
     dimensions — quantization degrades gracefully and the exact
     re-rank still corrects the shortlist; persistent saturation is a
     rebuild trigger, not an append concern."""
-    from cyborgdb_encrypted_vector_search_spark.operators import ann as A
-
     assigned = A.assign_centroids(df, centroids, vec_col)
     enc = sq8_encode(assigned, mins, maxs, vec_col=vec_col)
     enc.write.mode("append").partitionBy("centroid_id").parquet(path)
